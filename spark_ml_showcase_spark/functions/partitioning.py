@@ -41,6 +41,7 @@ def widen_narrow_scan(
     except Exception:  # stats unavailable — leave the frame alone
         return df
     width = max(1, min(par, in_bytes // max(1, bytes_per_task)))
-    if df.rdd.getNumPartitions() < width:
+    # the executed plan's own RDD, read on the JVM: no Python RDD wrapper
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < width:
         return df.repartition(width)
     return df

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_ml_showcase_spark.functions import vectors as V
+from spark_ml_showcase_spark.sources.io import read_parquet
 
 
 def as_double(col: str | Column) -> Column:
@@ -401,7 +402,7 @@ def _bloom_maybe_existing(
     # or a pre-v2 format must degrade to the exact full lookup, never
     # to a wrong answer or a read error surfacing mid-upsert
     try:
-        words = spark.read.parquet(idmap_dir)
+        words = read_parquet(spark, idmap_dir)
         if "fmt" not in words.columns:
             return None
         first = words.select(
@@ -477,7 +478,7 @@ def _bloom_union_batch(spark, index_dir: str, batch_ids: DataFrame) -> None:
     if not os.path.isdir(idmap_dir):
         return
     try:
-        words = spark.read.parquet(idmap_dir)
+        words = read_parquet(spark, idmap_dir)
         if "fmt" not in words.columns:
             raise ValueError("pre-v2 id-bloom manifest")
         first = words.select(
@@ -530,10 +531,10 @@ def load_ivf_index(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
     ``dpp_events_mondays``)."""
     import os
 
-    assigned = spark.read.parquet(os.path.join(index_dir, "cells")).select(
+    assigned = read_parquet(spark, os.path.join(index_dir, "cells")).select(
         "cand_id", "_cv", F.col("_cell").cast("int").alias("_cell")
     )
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    cent = read_parquet(spark, os.path.join(index_dir, "centroids"))
     return assigned, cent
 
 
@@ -772,7 +773,7 @@ def cached_eval_frame(
     d = _fingerprint_cached_dir(
         source_path, f"evalframe|{variant}|{params}", f"eval_{variant}_", build
     )
-    return spark.read.parquet(d)
+    return read_parquet(spark, d)
 
 
 def ivf_index_upsert(
@@ -832,7 +833,7 @@ def ivf_index_upsert(
     if os.path.isdir(stats_dir):
         stats = {
             int(r.cell): int(r.n_at_train)
-            for r in spark.read.parquet(stats_dir).collect()
+            for r in read_parquet(spark, stats_dir).collect()
         }
     else:  # pre-stats index layout: baseline = population at load
         stats = {

@@ -26,8 +26,8 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The join under test, shared by the registered query and the plan
     assertion: day-partitioned events ⋈ calendar filtered to Mondays."""
     fact_path, dim_path = io.materialize_events_by_day(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(F.col("dow_iso") == 1)
+    fact = io.read_parquet(spark, fact_path)
+    dim = io.read_parquet(spark, dim_path).filter(F.col("dow_iso") == 1)
     # align the dim key's type with whatever partition-type inference gave
     # the fact side (DATE here); casting the dim side leaves the fact
     # scan's partition attribute untouched so DPP can still latch onto it
@@ -130,7 +130,7 @@ def clustered_scan_value_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = clustering.materialize_events_clustered(
         spark, sf_dir, mode="value_range"
     )
-    ev = spark.read.parquet(path)
+    ev = io.read_parquet(spark, path)
     return (
         ev.filter((F.col("value") >= 200) & (F.col("value") < 300))
         .groupBy("event_type")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from spark_ml_showcase_spark.plans import query
+from spark_ml_showcase_spark.sources.io import read_parquet
 from spark_ml_showcase_spark.streaming import events as se
 
 
@@ -707,7 +708,7 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(_as_stream_dir(f"{sf_dir}/embeddings.parquet"))
     # static dimension on the STREAM's session (memory-sink tables and
     # stream-static joins are session-scoped)
-    docs = s2.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(s2, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
     # broadcast the dimension: a stream-static sort-merge would

@@ -3,6 +3,14 @@
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings, one parquet file each under
 ``/root/testdata/sf{0.001,0.01,0.1}/``.
+
+Every table loads through ``io.read_parquet``, so a table's schema is
+inferred on its first ``Catalog.table`` call in the process and read from
+that loader's memo on every later call, for as long as the process lives.
+The memo is keyed by the file path, its content fingerprint and the
+session's parquet-inference confs (``nanosAsLong`` among them, which the
+``events`` read sets first): a regenerated fixture, or another session
+setting, infers again.
 """
 
 from __future__ import annotations
@@ -11,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from spark_ml_showcase_spark.sources.io import read_parquet
 
 TESTDATA_TABLES = (
     "region",
@@ -58,7 +68,7 @@ class Catalog:
             # time zone; pin UTC (runtime-settable) so the epoch numbers
             # match DuckDB's tz-naive epoch() on any host.
             self.spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+        df = read_parquet(self.spark, f"{self.sf_dir}/{name}.parquet")
         if name == "events":
             ts_type = df.schema["ts"].dataType
             if isinstance(ts_type, LongType):

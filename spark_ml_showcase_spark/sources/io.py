@@ -11,7 +11,11 @@ but prefers explicit schemas and columnar formats:
 - explicit ``schema=`` skips inference entirely (zero extra passes);
 - parquet is the first-class interchange format — column pruning and
   predicate/row-group pushdown reach the scan (verify with
-  ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).
+  ``df.explain`` → ``PushedFilters`` / ``ReadSchema``);
+- every parquet read in the engine goes through ``read_parquet``, which
+  infers a path's schema on the first read in the process and reuses it
+  while the path's content fingerprint and the session's inference confs
+  are unchanged.
 """
 
 from __future__ import annotations
@@ -77,13 +81,46 @@ def read_json(
     return reader.json(path)
 
 
+#: session confs whose values change the schema parquet inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: (absolute path, ignore_corrupt, schema conf values) -> (source
+#: fingerprint, inferred schema): one entry per path and conf setting,
+#: for the life of the process. Two threads that miss on the same key
+#: both infer and store the same entry.
+_SCHEMAS: dict[tuple, tuple[str, T.StructType]] = {}
+
+
 def read_parquet(
-    spark: SparkSession,
-    path: str,
-    *columns: str,
-    ignore_corrupt: bool = False,
+    spark: SparkSession, *paths: str, ignore_corrupt: bool = False
 ) -> DataFrame:
-    """Parquet scan (S7). Optional column list prunes at the reader.
+    """Parquet scan (S7) — the engine's one loader for parquet tables.
+
+    Spark infers a parquet schema with a job of its own (``parquet at``)
+    on every ``spark.read.parquet``. This loader infers each path's
+    schema once per process and reads with ``.schema(s)`` after that:
+
+    - the memo is keyed by the absolute path, ``ignore_corrupt`` and the
+      session's values of ``_SCHEMA_CONFS``, and holds the path's
+      ``_source_fingerprint`` next to the schema. A changed fingerprint
+      (the path was rewritten) infers again and replaces the entry;
+    - the first read of a path in a process still infers, exactly as a
+      plain read does, so nothing is computed ahead of the run that
+      times it. The memo writes no files and dies with the process;
+    - a path ``os.stat`` cannot see (a glob, a remote URI, a missing
+      path) is read as a plain ``spark.read.parquet`` would read it;
+    - several paths read with one schema when every path's own schema
+      is known and they all agree — with ``mergeSchema`` off Spark takes
+      the schema of one of their files, which then is that schema. A
+      path not yet known is inferred on its own first; paths that
+      disagree are inferred together, as a plain read does.
 
     ``ignore_corrupt=True`` skips unreadable files instead of failing
     the job — the posture for a 100 TB lake where bit rot and partial
@@ -92,11 +129,29 @@ def read_parquet(
     the skip is OBSERVED, not silent). Default False: a small curated
     fixture set should fail loudly on corruption.
     """
+    if not paths:
+        raise TypeError("read_parquet needs at least one path")
     reader = spark.read
     if ignore_corrupt:
         reader = reader.option("ignoreCorruptFiles", "true")
-    df = reader.parquet(path)
-    return df.select(*columns) if columns else df
+    try:
+        fps = [_source_fingerprint(p) for p in paths]
+    except OSError:
+        return reader.parquet(*paths)
+    confs = (ignore_corrupt, *(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    schemas = []
+    for path, fp in zip(paths, fps):
+        key = (os.path.abspath(path), confs)
+        hit = _SCHEMAS.get(key)
+        if hit is None or hit[0] != fp:
+            df = reader.parquet(path)
+            hit = _SCHEMAS[key] = (fp, df.schema)
+            if len(paths) == 1:
+                return df
+        schemas.append(hit[1])
+    if any(s != schemas[0] for s in schemas[1:]):
+        return reader.parquet(*paths)
+    return reader.schema(schemas[0]).parquet(*paths)
 
 
 def cast_columns(df: DataFrame, casts: dict[str, str | T.DataType]) -> DataFrame:
@@ -313,7 +368,7 @@ def compact_parquet_dir(
     # would make the renames below fail on every subsequent run
     shutil.rmtree(path.rstrip("/") + ".old", ignore_errors=True)
     shutil.rmtree(path.rstrip("/") + ".compacting", ignore_errors=True)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     total = sum(
         os.path.getsize(os.path.join(r, f))
         for r, _, fs in os.walk(path)

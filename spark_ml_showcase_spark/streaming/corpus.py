@@ -63,6 +63,7 @@ from spark_ml_showcase_spark.operators.dedup import (
     _band_structs,
     _minhash_signatures_np,
 )
+from spark_ml_showcase_spark.sources.io import read_parquet
 
 
 def stream_minhash_dedup(
@@ -228,7 +229,7 @@ def stream_minhash_dedup(
             (sig_dir, ["_id"]),
         ):
             old = state_parts(d)
-            s.read.parquet(*old).repartition(
+            read_parquet(s, *old).repartition(
                 compact_partitions, *cluster
             ).sortWithinPartitions(*cluster).write.mode("overwrite").parquet(
                 os.path.join(d, f"base_g{new_gen}")
@@ -268,7 +269,7 @@ def stream_minhash_dedup(
         have_state = bool(bucket_parts)
         if have_state:
             refs = (
-                s.read.parquet(*bucket_parts)
+                read_parquet(s, *bucket_parts)
                 .select("band", "bh", F.col("_id").alias("_rid"))
                 .withColumn("_state", F.lit(True))
                 .unionByName(refs)
@@ -281,7 +282,7 @@ def stream_minhash_dedup(
         )
         all_sigs = sigs
         if sig_parts:
-            all_sigs = s.read.parquet(*sig_parts).unionByName(sigs)
+            all_sigs = read_parquet(s, *sig_parts).unionByName(sigs)
         est = (
             cand.join(
                 sigs.select(F.col("_id").alias("_nid"), F.col("_sig").alias("_ns")),
@@ -355,7 +356,7 @@ def stream_minhash_dedup(
         return s.createDataFrame(
             [], f"{id_col} bigint, signature array<bigint>"
         )
-    return s.read.parquet(*final_parts).select(
+    return read_parquet(s, *final_parts).select(
         F.col("_id").alias(id_col), F.col("_sig").alias("signature")
     )
 

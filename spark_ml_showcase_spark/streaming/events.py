@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
+from spark_ml_showcase_spark.sources.io import read_parquet
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
     "value double, props string"
@@ -295,7 +297,7 @@ def run_to_parquet(
             q.stop()
     # read back via the STREAM's session (the file sink is session-
     # agnostic, but the stream may run on an isolated _stream_session)
-    return stream_df.sparkSession.read.parquet(data_dir)
+    return read_parquet(stream_df.sparkSession, data_dir)
 
 
 def run_to_memory(
@@ -437,7 +439,7 @@ def stream_staged(
     an isolated ``_stream_session``; the declared schema is taken from a
     batch read of the same directory."""
     spark = _stream_session(spark)
-    schema = spark.read.parquet(staged_dir).schema
+    schema = read_parquet(spark, staged_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -489,7 +491,7 @@ def upsert_latest_per_key(
         s = batch_df.sparkSession
         merged = batch_df.select(cols)
         if os.path.exists(os.path.join(cur_dir, "_SUCCESS")):
-            merged = s.read.parquet(cur_dir).select(cols).unionByName(merged)
+            merged = read_parquet(s, cur_dir).select(cols).unionByName(merged)
         latest = (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -527,7 +529,7 @@ def upsert_latest_per_key(
     if not os.path.exists(os.path.join(cur_dir, "_SUCCESS")):
         # zero input → no batch ever ran → empty state, same schema
         return s.createDataFrame([], stream_df.schema)
-    return s.read.parquet(cur_dir)
+    return read_parquet(s, cur_dir)
 
 
 def tws_available() -> bool:

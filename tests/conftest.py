@@ -24,3 +24,31 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def stages_run_by(spark):
+    """``stages_run_by(fn)`` calls ``fn()`` under a fresh job group and
+    returns ``(result, names)``: the names of the stages of every job
+    Spark ran for it (a parquet schema inference shows as
+    ``parquet at …``)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"stages-run-by-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        names = []
+        for job in tracker.getJobIdsForGroup(group):
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                names.append(info.name if info is not None else "")
+        return out, names
+
+    return run

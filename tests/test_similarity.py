@@ -479,7 +479,7 @@ def test_ivf_index_upsert_splits_overgrown_cell(spark, tmp_path):
 
 
 def test_cached_ivf_index_builds_once_and_invalidates_on_content(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stages_run_by
 ):
     """r11 judge item #3: the suite-level index cache builds on first
     use, LOADS (no rebuild) on every later call with the same (source
@@ -511,10 +511,14 @@ def test_cached_ivf_index_builds_once_and_invalidates_on_content(
     )
     assert len(builds) == 1
     n1 = a1.count()
-    a2, _ = similarity.cached_ivf_index(
-        spark, src, candidates, variant="t", n_lists=4, seed=40
+    (a2, _), stages = stages_run_by(
+        lambda: similarity.cached_ivf_index(
+            spark, src, candidates, variant="t", n_lists=4, seed=40
+        )
     )
     assert len(builds) == 1  # cache hit: loaded, not rebuilt
+    # the reload reads the store through the schema memo: no inference
+    assert not [s for s in stages if s.startswith("parquet at ")]
     assert a2.count() == n1
     # identical assignment on reload (the cache IS the determinism)
     assert a1.exceptAll(a2).count() == 0

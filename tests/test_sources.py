@@ -96,7 +96,9 @@ def test_catalog_events_ts_adapts_to_both_fixture_generations(spark, tmp_path):
     """The fixture generator has shipped events.ts as TIMESTAMP(NANOS)
     (read as raw long under nanosAsLong) and as naive timestamp[us]
     (TIMESTAMP_NTZ). Catalog.table must normalize BOTH to the same
-    session-UTC instants — epoch seconds are what every oracle compares."""
+    session-UTC instants — epoch seconds are what every oracle compares.
+    Each generation is read twice: the second read takes its schema from
+    the loader's memo, and must adapt the same way."""
     import datetime as dt
     import os
     import shutil
@@ -125,13 +127,15 @@ def test_catalog_events_ts_adapts_to_both_fixture_generations(spark, tmp_path):
         ts = pa.array(instants, pa.timestamp(unit))
         table = pa.table({**cols, "ts": ts})
         pq.write_table(table, os.path.join(d, "events.parquet"))
-        ev = Catalog(spark, d).events
-        assert str(ev.schema["ts"].dataType) == "TimestampType()"
-        got[unit] = {
-            r.s for r in ev.select(F.col("ts").cast("long").alias("s")).collect()
-        }
+        for read in ("infer", "memo"):
+            ev = Catalog(spark, d).events
+            assert str(ev.schema["ts"].dataType) == "TimestampType()"
+            got[unit, read] = {
+                r.s
+                for r in ev.select(F.col("ts").cast("long").alias("s")).collect()
+            }
         shutil.rmtree(d)
-    assert got["us"] == got["ns"] == want
+    assert len(got) == 4 and all(v == want for v in got.values())
 
 
 def test_compact_parquet_dir(spark, tmp_path):
@@ -293,3 +297,88 @@ def test_compact_recovers_from_crashed_prior_run(spark, tmp_path):
     assert compact_parquet_dir(spark, d) == 1
     assert {r.k for r in spark.read.parquet(d).collect()} == {1, 2}
     assert not os.path.exists(d + ".old")
+
+
+def _is_schema_inference(stage_name: str) -> bool:
+    return stage_name.startswith("parquet at ")
+
+
+def test_read_parquet_second_read_runs_no_job(spark, tmp_path, stages_run_by):
+    """The first read of a path infers its schema with a Spark job; the
+    second takes the memoized schema and runs no job at all, with the
+    same schema, nullability and field metadata included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(str(tmp_path), "t.parquet")
+    schema = pa.schema(
+        [pa.field("k", pa.int64(), nullable=False), pa.field("v", pa.string())]
+    )
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", None, "c"]}, schema), path)
+
+    first, stages = stages_run_by(lambda: io.read_parquet(spark, path))
+    assert any(_is_schema_inference(s) for s in stages)
+    second, stages = stages_run_by(lambda: io.read_parquet(spark, path))
+    assert stages == []
+    # the JSON form carries every field's type, nullability and metadata
+    assert second.schema.jsonValue() == first.schema.jsonValue()
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_rewritten_path_infers_again(spark, tmp_path, stages_run_by):
+    """A file rewritten at the same path with another schema changes its
+    fingerprint: the next read infers again and sees the new columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(str(tmp_path), "t.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    assert io.read_parquet(spark, path).columns == ["k"]
+    pq.write_table(
+        pa.table({"k": pa.array([1.5], pa.float64()), "w": ["x"]}), path
+    )
+    df, stages = stages_run_by(lambda: io.read_parquet(spark, path))
+    assert any(_is_schema_inference(s) for s in stages)
+    assert df.dtypes == [("k", "double"), ("w", "string")]
+    assert [tuple(r) for r in df.collect()] == [(1.5, "x")]
+
+
+def test_read_parquet_several_paths(spark, tmp_path, stages_run_by):
+    """Several known paths that agree read with no job; paths whose
+    schemas disagree fall back to one joint inference, as a plain read."""
+    a, b, c = (os.path.join(str(tmp_path), n) for n in "abc")
+    spark.createDataFrame([(1, "x")], "k bigint, v string").write.parquet(a)
+    spark.createDataFrame([(2, "y")], "k bigint, v string").write.parquet(b)
+    spark.createDataFrame([(3,)], "k bigint").write.parquet(c)
+    for p in (a, b, c):
+        io.read_parquet(spark, p)
+
+    df, stages = stages_run_by(lambda: io.read_parquet(spark, a, b))
+    assert stages == []
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+    df, stages = stages_run_by(lambda: io.read_parquet(spark, a, c))
+    assert any(_is_schema_inference(s) for s in stages)
+    assert df.count() == 2
+
+
+def test_parquet_reads_go_through_the_loader():
+    """``io.read_parquet`` is the engine's one parquet loader: no module
+    of the package calls ``.read.parquet(`` itself."""
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spark_ml_showcase_spark",
+    )
+    direct = re.compile(r"\.read\s*\.parquet\(")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            p = os.path.join(root, name)
+            with open(p, encoding="utf-8") as f:
+                for i, line in enumerate(f, 1):
+                    if direct.search(line):
+                        hits.append(f"{os.path.relpath(p, pkg)}:{i}")
+    assert hits == []
