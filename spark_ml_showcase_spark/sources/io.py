@@ -116,11 +116,8 @@ def read_parquet(
       times it. The memo writes no files and dies with the process;
     - a path ``os.stat`` cannot see (a glob, a remote URI, a missing
       path) is read as a plain ``spark.read.parquet`` would read it;
-    - several paths read with one schema when every path's own schema
-      is known and they all agree — with ``mergeSchema`` off Spark takes
-      the schema of one of their files, which then is that schema. A
-      path not yet known is inferred on its own first; paths that
-      disagree are inferred together, as a plain read does.
+    - several paths in one call are not memoized: they are read, and
+      inferred together, as a plain ``spark.read.parquet`` reads them.
 
     ``ignore_corrupt=True`` skips unreadable files instead of failing
     the job — the posture for a 100 TB lake where bit rot and partial
@@ -129,29 +126,27 @@ def read_parquet(
     the skip is OBSERVED, not silent). Default False: a small curated
     fixture set should fail loudly on corruption.
     """
-    if not paths:
-        raise TypeError("read_parquet needs at least one path")
     reader = spark.read
     if ignore_corrupt:
         reader = reader.option("ignoreCorruptFiles", "true")
+    if len(paths) != 1:
+        return reader.parquet(*paths)
+    (path,) = paths
     try:
-        fps = [_source_fingerprint(p) for p in paths]
+        fp = _source_fingerprint(path)
     except OSError:
-        return reader.parquet(*paths)
-    confs = (ignore_corrupt, *(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
-    schemas = []
-    for path, fp in zip(paths, fps):
-        key = (os.path.abspath(path), confs)
-        hit = _SCHEMAS.get(key)
-        if hit is None or hit[0] != fp:
-            df = reader.parquet(path)
-            hit = _SCHEMAS[key] = (fp, df.schema)
-            if len(paths) == 1:
-                return df
-        schemas.append(hit[1])
-    if any(s != schemas[0] for s in schemas[1:]):
-        return reader.parquet(*paths)
-    return reader.schema(schemas[0]).parquet(*paths)
+        return reader.parquet(path)
+    key = (
+        os.path.abspath(path),
+        ignore_corrupt,
+        *(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    _SCHEMAS[key] = (fp, df.schema)
+    return df
 
 
 def cast_columns(df: DataFrame, casts: dict[str, str | T.DataType]) -> DataFrame:

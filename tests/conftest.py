@@ -43,6 +43,9 @@ def stages_run_by(spark):
             out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        # the tracker is filled by the listener bus, which runs behind
+        # the job: drain it so a job that ran is not missed
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = sc.statusTracker()
         names = []
         for job in tracker.getJobIdsForGroup(group):

@@ -343,42 +343,113 @@ def test_read_parquet_rewritten_path_infers_again(spark, tmp_path, stages_run_by
     assert [tuple(r) for r in df.collect()] == [(1.5, "x")]
 
 
-def test_read_parquet_several_paths(spark, tmp_path, stages_run_by):
-    """Several known paths that agree read with no job; paths whose
-    schemas disagree fall back to one joint inference, as a plain read."""
-    a, b, c = (os.path.join(str(tmp_path), n) for n in "abc")
-    spark.createDataFrame([(1, "x")], "k bigint, v string").write.parquet(a)
-    spark.createDataFrame([(2, "y")], "k bigint, v string").write.parquet(b)
-    spark.createDataFrame([(3,)], "k bigint").write.parquet(c)
-    for p in (a, b, c):
-        io.read_parquet(spark, p)
+def _parquet_reader_calls(tree):
+    """Yield ``(function name, line)`` of every ``.parquet(...)`` call on
+    a batch reader: a receiver chain that passes through ``.read``
+    (``spark.read.option(...).parquet(``, split over lines or not), or a
+    local name bound to such a chain (``reader = spark.read``)."""
+    import ast
 
-    df, stages = stages_run_by(lambda: io.read_parquet(spark, a, b))
-    assert stages == []
-    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
-    df, stages = stages_run_by(lambda: io.read_parquet(spark, a, c))
-    assert any(_is_schema_inference(s) for s in stages)
-    assert df.count() == 2
+    def chain(node):
+        # attribute names along a receiver chain, and the Name at its root
+        names = []
+        while True:
+            if isinstance(node, ast.Call):
+                node = node.func
+            elif isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                return names, node.id if isinstance(node, ast.Name) else None
+
+    def is_reader(node, readers):
+        names, root = chain(node)
+        names.reverse()  # from the root outward
+        if "read" in names:
+            names = names[len(names) - names[::-1].index("read"):]
+        elif root not in readers:
+            return False
+        return all(n in ("option", "options", "schema", "format") for n in names)
+
+    funcs = [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    for fn in funcs:
+        readers: set[str] = set()
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign) and is_reader(node.value, readers):
+                readers |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and is_reader(node.func.value, readers)
+            ):
+                yield fn.name, node.lineno
+
+
+#: reads that may call the parquet reader themselves: the loader, and a
+#: snapshot read whose schema is a ``mergeSchema`` union over files
+_OWN_PARQUET_READS = {
+    ("sources/io.py", "read_parquet"),
+    ("sources/versioned.py", "read_snapshot"),
+}
+
+
+def test_parquet_reader_lint_sees_chains_and_bound_readers():
+    import ast
+    import textwrap
+
+    src = textwrap.dedent(
+        """
+        def f(spark, p):
+            a = spark.read.parquet(p)
+            b = spark.read.option("x", 1).parquet(p)
+            c = (
+                spark.read
+                .option("x", 1)
+                .parquet(p)
+            )
+            r = spark.read
+            r = r.option("x", 1)
+            d = r.parquet(p)
+            spark.readStream.schema("k int").parquet(p)
+            a.write.parquet(p)
+            a.select("k").write.mode("overwrite").parquet(p)
+            open(p).read()
+        """
+    )
+    lines = [line for _, line in _parquet_reader_calls(ast.parse(src))]
+    assert sorted(lines) == [3, 4, 6, 12]
 
 
 def test_parquet_reads_go_through_the_loader():
-    """``io.read_parquet`` is the engine's one parquet loader: no module
-    of the package calls ``.read.parquet(`` itself."""
-    import re
+    """``io.read_parquet`` is the engine's one parquet loader: outside it
+    (and the allow-listed snapshot read) no function of the package calls
+    ``.parquet(`` on a batch reader."""
+    import ast
 
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "spark_ml_showcase_spark",
     )
-    direct = re.compile(r"\.read\s*\.parquet\(")
     hits = []
+    seen = set()
     for root, _, files in os.walk(pkg):
         for name in files:
             if not name.endswith(".py"):
                 continue
             p = os.path.join(root, name)
+            rel = os.path.relpath(p, pkg).replace(os.sep, "/")
             with open(p, encoding="utf-8") as f:
-                for i, line in enumerate(f, 1):
-                    if direct.search(line):
-                        hits.append(f"{os.path.relpath(p, pkg)}:{i}")
+                tree = ast.parse(f.read(), p)
+            for fn, line in _parquet_reader_calls(tree):
+                if (rel, fn) in _OWN_PARQUET_READS:
+                    seen.add((rel, fn))
+                else:
+                    hits.append(f"{rel}:{line} in {fn}")
     assert hits == []
+    # a stale allow-list entry would hide nothing, but says something false
+    assert seen == _OWN_PARQUET_READS
